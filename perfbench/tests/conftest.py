@@ -1,0 +1,9 @@
+"""Make the checkout importable (``perfbench``, ``timedb_spark``) whatever
+directory pytest is started from."""
+
+import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[2]
+if str(ROOT) not in sys.path:
+    sys.path.insert(0, str(ROOT))
