@@ -434,11 +434,10 @@ def _q_stream_latest_state_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax of value over (knowledge_time, change_time), the winning row's
     valid_time as payload, emitted on change across ≥2 micro-batches.
 
-    Keyed by series_id (NOT (series, hour)) deliberately: every v2 state
-    access is a per-key protobuf RPC, so the fine-grained key costs 78 s at
-    sf0.1 vs 10 s entity-keyed on identical rows — see the guidance in
-    streaming/state_v2.py. The per-(series, hour) collapse at scale stays
-    on v1 (stream_latest_state: in-band Arrow state, no per-key RPC).
+    This is the API's default keying (one state row per series). The
+    per-(series, hour) twin of stream_latest_state is
+    ``stream_latest_state_v2(per_valid_time=True)``, which runs v1's own
+    transition grouped by series; both are pinned in tests/test_streaming.py.
 
     The v2 protocol needs google.protobuf in every Spark Python process
     (vendored at package import when absent — streaming/_proto_compat.py);

@@ -7,6 +7,7 @@ Structured Streaming batch-equivalence contract)."""
 from __future__ import annotations
 
 import uuid
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import Window
@@ -29,6 +30,21 @@ def _run_to_memory(stream_df, output_mode: str):
     )
     q.awaitTermination(300)
     return name
+
+
+@contextmanager
+def _rocksdb(spark):
+    """Run the block with the RocksDB state store, which the v2 API needs."""
+    conf = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(conf, None)
+    spark.conf.set(conf, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
 
 
 @pytest.fixture(scope="module")
@@ -251,6 +267,39 @@ def test_stream_latest_state_v2_matches_batch_latest(spark, sf_dir, tmp_path):
     assert len(got) == len(exp)
     matches = sum(1 for k, v in exp.items() if got.get(k) == v or (v != v and got.get(k) != got.get(k)))
     assert matches == len(exp)
+
+
+def test_stream_latest_state_v1_v2_emit_identical_batches(spark, sf_dir, tmp_path):
+    """v1 and v2 ``per_valid_time=True`` run one transition
+    (``state.fold_latest``): over an in-order landing zone replayed one file
+    per micro-batch, they emit the same rows in every batch."""
+    from timedb_spark.streaming import stage_ordered_landing, state_v2
+
+    if not state_v2._HAVE_TWS:
+        pytest.skip(f"transformWithStateInPandas gated: missing {state_v2._TWS_MISSING}")
+
+    sv = bitemporal_frame(spark, sf_dir).select(
+        "series_id", "valid_time", "knowledge_time", "change_time", "value"
+    )
+    d = stage_ordered_landing(sv, str(tmp_path / "sv"), 3, "knowledge_time")
+
+    def drain(build) -> dict[int, list]:
+        batches: dict[int, list] = {}
+
+        def collect(df, batch_id):
+            batches[batch_id] = sorted(tuple(r) for r in df.collect())
+
+        stream = spark.readStream.schema(sv.schema).option("maxFilesPerTrigger", 1).parquet(d)
+        q = build(stream).writeStream.foreachBatch(collect).outputMode("update").trigger(availableNow=True).start()
+        q.awaitTermination(300)
+        return batches
+
+    v1 = drain(stream_latest_state)
+    with _rocksdb(spark):
+        v2 = drain(lambda s: state_v2.stream_latest_state_v2(s, per_valid_time=True))
+    assert len(v1) >= 3
+    assert all(v1.values())
+    assert v1 == v2
 
 
 def test_stream_latest_state_v2_series_matches_batch(spark, sf_dir, tmp_path):
@@ -822,6 +871,71 @@ def test_stream_dedup_v2_matches_batch_distinct(spark, sf_dir, tmp_path):
     assert len(rows) == expected
     keys = [r.text_key for r in rows]
     assert len(set(keys)) == len(keys)  # one emission per key, ever
+    assert all((r.text_key, r.doc_id) in valid for r in rows)
+
+
+def test_stream_dedup_v2_ttl_processing_time(spark, sf_dir, tmp_path):
+    """``DedupProcessor(ttl=True)`` paired with timeMode="ProcessingTime"
+    (the caller-side pairing its docstring describes), where the stock
+    runner asks the state server for the batch timestamp after setting each
+    task's first key. Pipelined (unread) key responses would be read as
+    that timestamp: the processor must see the real processing time, and
+    with a 24 h TTL nothing expires, so the drain equals batch
+    count(distinct)."""
+    import json
+    import time
+
+    from timedb_spark.io.tables import load_table
+    from timedb_spark.streaming import state_v2
+    from timedb_spark.streaming.dedup import DOCUMENTS_STREAM_SCHEMA, text_key
+
+    if not state_v2._HAVE_TWS:
+        pytest.skip(f"transformWithStateInPandas gated: missing {state_v2._TWS_MISSING}")
+
+    start_ms = int(time.time() * 1000)
+
+    class CheckedDedup(state_v2.DedupProcessor):
+        def handleInputRows(self, key, rows, timerValues):
+            now = timerValues.getCurrentProcessingTimeInMs()
+            if now < start_ms:
+                raise ValueError(f"batch processing time {now} ms precedes the test start {start_ms} ms")
+            yield from super().handleInputRows(key, rows, timerValues)
+
+    docs = load_table(spark, sf_dir, "documents")
+    d = str(tmp_path / "docs")
+    docs.repartition(3).write.mode("overwrite").parquet(d)
+    keyed = docs.select("doc_id", text_key(F.col("text")).alias("k"))
+    expected = keyed.select("k").distinct().count()
+    valid = {(r.k, r.doc_id) for r in keyed.collect()}
+
+    name = "t" + uuid.uuid4().hex[:12]
+    with _rocksdb(spark):
+        stream = spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA).option("maxFilesPerTrigger", 1).parquet(d)
+        # same projection as state_v2.stream_dedup_v2
+        bucketed = stream.select("doc_id", text_key(F.col("text")).alias("tkey")).withColumn(
+            "bucket", F.substring("tkey", 1, state_v2._DEDUP_BUCKET_CHARS)
+        )
+        out = bucketed.groupBy("bucket").transformWithStateInPandas(
+            CheckedDedup(ttl=True), state_v2.DEDUP_OUTPUT_SCHEMA, "Update", "ProcessingTime"
+        )
+        q = out.writeStream.format("memory").queryName(name).outputMode("update").start()
+        try:
+            # ProcessingTime keeps scheduling no-data batches, so neither
+            # availableNow nor processAllAvailable() ever returns: wait for
+            # the batch that read the last of the 3 files
+            deadline = time.time() + 240
+            while time.time() < deadline and q.isActive:
+                lp = q.lastProgress
+                if lp and (json.loads(lp.json)["sources"][0]["endOffset"] or {}).get("logOffset") == 2:
+                    break
+                time.sleep(1)
+            assert q.exception() is None, str(q.exception())[:2000]
+        finally:
+            q.stop()
+        rows = spark.table(name).collect()
+
+    assert len(rows) == expected
+    assert len({r.text_key for r in rows}) == len(rows)
     assert all((r.text_key, r.doc_id) in valid for r in rows)
 
 

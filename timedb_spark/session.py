@@ -93,6 +93,33 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     _SHIPPED_APPS.add(app)
 
 
+@contextmanager
+def _package_root_on_pythonpath():
+    """Append the directory holding ``timedb_spark`` to ``PYTHONPATH`` for
+    the duration of the block, then restore the previous value.
+
+    ``addPyFile`` (:func:`ensure_package_shipped`) reaches task workers
+    only. ``transformWithStateInPandas`` also runs the processor's
+    ``init()`` in a Python process the JVM launches on the driver while
+    planning the query; that process unpickles the processor, so it must
+    import ``timedb_spark`` from its environment. The JVM copies this
+    process's environment when it launches and hands its copy to every
+    Python process it starts, so the root only needs to be exported while
+    the JVM starts; restoring it afterwards leaves later subprocesses of
+    the host program unchanged."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    prev = os.environ.get("PYTHONPATH")
+    if root not in (prev or "").split(os.pathsep):
+        os.environ["PYTHONPATH"] = prev + os.pathsep + root if prev else root
+    try:
+        yield
+    finally:
+        if prev is None:
+            os.environ.pop("PYTHONPATH", None)
+        else:
+            os.environ["PYTHONPATH"] = prev
+
+
 def get_spark(app_name: str = "timedb_spark", *, extra_conf: dict[str, str] | None = None) -> SparkSession:
     # Probe for a google.protobuf runtime BEFORE the JVM launches: the state
     # API v2 (transformWithStateInPandas) needs it in every Python worker,
@@ -126,6 +153,7 @@ def get_spark(app_name: str = "timedb_spark", *, extra_conf: dict[str, str] | No
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with _package_root_on_pythonpath():
+        spark = builder.getOrCreate()
     ensure_package_shipped(spark)
     return spark

@@ -1,18 +1,21 @@
 """Spark 4 state API v2 (``transformWithStateInPandas``) twin of
 ``streaming.state.stream_latest_state``.
 
-Same semantics — per ``(series_id, valid_time)`` key keep the argmax of
-``value`` over ``(knowledge_time, change_time)``, emit on change — but on
-the new ``StatefulProcessor`` API: typed ``ValueState`` handles, explicit
-init/close lifecycle, RocksDB-backed state store (required by the API; also
-the store you'd run at 100 TB — changelog checkpointing + bounded memory,
-vs the HDFS-backed in-memory map of the v1 API).
+``stream_latest_state_v2`` offers two keyings. The default keeps, per
+``series_id``, the argmax of ``value`` over ``(knowledge_time,
+change_time)`` with the winning row's ``valid_time`` as payload
+(:class:`SeriesLatestProcessor`). ``per_valid_time=True`` has v1's
+semantics — per ``(series_id, valid_time)`` the argmax, emitted on change
+— and runs v1's own transition, ``state.fold_latest``, grouped by series
+with the hour map in one ``ValueState`` (``state.LatestHoursProcessor``).
+Both run on the new ``StatefulProcessor`` API: typed state handles,
+explicit init/close lifecycle, RocksDB-backed state store (required by the
+API; also the store you'd run at 100 TB — changelog checkpointing +
+bounded memory, vs the HDFS-backed in-memory map of the v1 API).
 
-Why keep both: v1 (``applyInPandasWithState``) is the portable baseline;
-v2 is where Spark's stateful processing is headed (timers, multiple state
-variables, TTL on state, initial-state bootstrap). The per-key Python
-dispatch cost is the same order — the win is operational (state-store
-lifecycle), not per-row CPU.
+Why keep both APIs: v1 (``applyInPandasWithState``) is the portable
+baseline; v2 is where Spark's stateful processing is headed (timers,
+multiple state variables, TTL on state, initial-state bootstrap).
 
 The v2 protocol is protobuf-framed, so every Spark Python process needs
 ``google.protobuf``. ``_proto_compat.ensure_protobuf`` vendors a pure-Python
@@ -31,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from timedb_spark.streaming._proto_compat import ensure_protobuf
-from timedb_spark.streaming.state import OUTPUT_SCHEMA
+from timedb_spark.streaming.state import OUTPUT_SCHEMA, LatestHoursProcessor
 
 #: exact unmet precondition ("" when runnable) — surfaced in skip messages
 #: and the NotImplementedError so a probe records WHY the gate is closed.
@@ -69,73 +72,6 @@ if _HAVE_TWS:
     except Exception:  # pragma: no cover - never block the gate on a perf patch
         pass
 
-#: per-key scalar state: the current argmax observation. v1's STATE_SCHEMA
-#: is array-shaped (it keys by series_id and tracks every valid_time in one
-#: state row); v2 keys by (series_id, valid_time) so state is 3 scalars.
-V2_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("kt_us", T.LongType()),
-        T.StructField("ct_us", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-    ]
-)
-
-
-class LatestStateProcessor(StatefulProcessor):
-    """argmax-by-(kt, ct) per key, ValueState-backed.
-
-    Per-key constants are the wall-clock here (one Python dispatch + state
-    RPCs + one emitted frame PER KEY) — r14 trims all three: the
-    ``_tws_fastpath`` wire codec replaces the pure-Python protobuf builds
-    (~120-140 µs/call → ~10 µs, identical bytes), and the emitted one-row
-    frame is built from typed numpy arrays with ``copy=False`` (measured
-    1,040 µs → 270 µs vs dtype-inferred lists-of-Timestamps)."""
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        from timedb_spark.streaming._tws_fastpath import patch_implicit_key, wrap_value_state
-
-        patch_implicit_key(handle, pipeline=True)
-        self._state = wrap_value_state(handle.getValueState("latest", V2_STATE_SCHEMA))
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        # one get() instead of exists()+get(): every state access is a
-        # protobuf round-trip to the JVM state server, and get() already
-        # encodes absence as None — per key per batch this is the hot path.
-        cur = self._state.get()
-        best = tuple(cur) if cur is not None else None
-        changed = False
-        for pdf in rows:
-            if not len(pdf):
-                continue
-            kt = pdf["knowledge_time"].values.astype("datetime64[us]").astype("int64")
-            ct = pdf["change_time"].values.astype("datetime64[us]").astype("int64")
-            i = int(np.lexsort((ct, kt))[-1])
-            cand = (int(kt[i]), int(ct[i]), float(pdf["value"].iloc[i]))
-            if best is None or cand[:2] > best[:2]:
-                best = cand
-                changed = True
-        if changed and best is not None:
-            self._state.update(best)
-            sid, vt = key
-            yield pd.DataFrame(
-                {
-                    "series_id": np.array([int(sid)], dtype="int64"),
-                    "valid_time": np.array([vt], dtype="datetime64[us]"),
-                    "value": np.array([best[2]], dtype="float64"),
-                    "knowledge_time": np.array([best[0]], dtype="datetime64[us]"),
-                    "change_time": np.array([best[1]], dtype="datetime64[us]"),
-                },
-                copy=False,
-            )
-
-    def close(self) -> None:
-        pass
-
-
 #: series-keyed variant: ``valid_time`` rides as DATA (the winning row's
 #: hour), so state carries it alongside the argmax observation.
 V2_SERIES_STATE_SCHEMA = T.StructType(
@@ -150,7 +86,11 @@ V2_SERIES_STATE_SCHEMA = T.StructType(
 
 class SeriesLatestProcessor(StatefulProcessor):
     """argmax-by-(kt, ct) per SERIES (valid_time is payload, not key).
-    Same per-key fast path as :class:`LatestStateProcessor`."""
+
+    Per-key constants are the wall-clock here (one Python dispatch + state
+    RPCs + one emitted frame per key): the ``_tws_fastpath`` wire codec
+    replaces the pure-Python protobuf builds, and the emitted one-row frame
+    is built from typed numpy arrays with ``copy=False``."""
 
     def init(self, handle: "StatefulProcessorHandle") -> None:
         from timedb_spark.streaming._tws_fastpath import patch_implicit_key, wrap_value_state
@@ -199,30 +139,24 @@ def stream_latest_state_v2(sv_stream: DataFrame, *, per_valid_time: bool = False
     Caller must enable the RocksDB state store provider
     (``spark.sql.streaming.stateStore.providerClass``).
 
-    Key-cardinality guidance (the v2 wall-clock lever): every TWS state
-    access is a protobuf RPC to the JVM state server, so cost scales with
-    DISTINCT KEYS PER BATCH, not rows — measured at sf0.1 (100k rows,
-    local[32], pure-Python protobuf runtime): 95,583 ``(series, hour)``
-    keys → 78 s vs 1,500 ``series`` keys → 10 s, identical row volume.
-    Default is therefore the entity-level key (``series_id``; the winning
-    row's ``valid_time`` rides as payload). ``per_valid_time=True`` keeps
-    the fine-grained key for semantics parity with v1 — but at that
-    granularity prefer v1 (``applyInPandasWithState`` ships state in-band
-    in Arrow batches, no per-key RPC: 6 s on the same 95k keys)."""
+    Default: one state row per ``series_id`` holding the latest
+    observation over all hours (the winning row's ``valid_time`` rides as
+    payload). ``per_valid_time=True``: v1's per-``(series_id, valid_time)``
+    output on change, computed by v1's own transition
+    (``state.fold_latest``) with the stream grouped by ``series_id`` and
+    the hour map in one ``ValueState`` of v1's ``STATE_SCHEMA`` — one
+    Python call and one state row per touched series per batch. A
+    checkpoint written by the earlier layout of this mode (one state row
+    per ``(series_id, valid_time)`` key) cannot be resumed: its key and
+    value schemas differ, so Spark's state-schema check rejects it when the
+    query starts."""
     if not _HAVE_TWS:
         raise NotImplementedError(
             f"transformWithStateInPandas unavailable: missing {_TWS_MISSING} "
             "(re-probed at import; install the dep to unlock the v2 path)"
         )
-    if per_valid_time:
-        return sv_stream.groupBy("series_id", "valid_time").transformWithStateInPandas(
-            statefulProcessor=LatestStateProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
     return sv_stream.groupBy("series_id").transformWithStateInPandas(
-        statefulProcessor=SeriesLatestProcessor(),
+        statefulProcessor=LatestHoursProcessor() if per_valid_time else SeriesLatestProcessor(),
         outputStructType=OUTPUT_SCHEMA,
         outputMode="Update",
         timeMode="None",
@@ -670,7 +604,10 @@ class DedupProcessor(StatefulProcessor):
     def init(self, handle: "StatefulProcessorHandle") -> None:
         from timedb_spark.streaming._tws_fastpath import patch_implicit_key, wrap_map_state
 
-        patch_implicit_key(handle, pipeline=True)
+        # no pipelining under ttl's ProcessingTime: the stock runner reads
+        # the batch timestamp right after setting a task's first key, and
+        # would read the deferred key response instead
+        patch_implicit_key(handle, pipeline=not self._ttl)
         if self._ttl:
             self._seen = handle.getMapState(
                 "seen", "text_key STRING", "doc_id LONG, n_dups LONG",

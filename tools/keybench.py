@@ -1,14 +1,20 @@
-"""Micro-bench: v2 state-API wall-clock vs state-key cardinality.
+"""Micro-bench: the latest-state stream on the v1 and v2 state APIs, by
+grouping key, over identical input rows.
 
-The state API v2 (``transformWithStateInPandas``) pays a protobuf RPC to the
-JVM state server PER KEY PER BATCH, so the number of distinct grouping keys
-— not row volume — is the wall-clock lever. stream_latest_state_v2 is
-therefore keyed at the ENTITY level (``series_id``, ~1.5k keys at sf0.1) by
-default rather than the fine ``(series_id, valid_time)`` grain (~95k keys)
-that v1 collapses in-band with no per-key RPC. This script MEASURES that
-claim on identical input rows and writes one JSON artifact
-(KEYBENCH_r{N}.json) so the guidance in streaming/state_v2.py stays
-verifiable as the code evolves (VERDICT r5 task #6).
+- ``v2_fine_key``: ``stream_latest_state_v2(per_valid_time=True)``. Per
+  (series, hour) output, computed by v1's transition (``fold_latest``):
+  one Python dispatch per touched series, the per-hour state in one
+  ValueState per series.
+- ``v2_entity_key``: the v2 default, one state row and one output row per
+  series (latest observation over all hours).
+- ``v1_arrow_state``: ``stream_latest_state`` (``applyInPandasWithState``),
+  the same per-(series, hour) output as ``v2_fine_key``, so the two must
+  emit the same number of rows.
+
+The landing zone is staged with ``streaming.stage_ordered_landing`` into a
+fixed number of files ordered by knowledge_time, so micro-batch composition
+does not depend on the host's core count. Writes one JSON artifact
+(KEYBENCH_r{N}.json).
 
 Usage: python tools/keybench.py [sf_dir] [out.json]
 """
@@ -16,14 +22,21 @@ Usage: python tools/keybench.py [sf_dir] [out.json]
 from __future__ import annotations
 
 import json
+import os
+import shutil
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from timedb_spark.io.tables import bitemporal_frame  # noqa: E402
 from timedb_spark.session import get_spark  # noqa: E402
+from timedb_spark.streaming import stage_ordered_landing  # noqa: E402
+
+#: landing-zone files, replayed two per micro-batch
+N_FILES = 4
 
 
 def main(sf_dir: str, out_path: str) -> int:
@@ -42,7 +55,8 @@ def main(sf_dir: str, out_path: str) -> int:
     sv = bitemporal_frame(spark, sf_dir).select(
         "series_id", "valid_time", "knowledge_time", "change_time", "value"
     )
-    d = entrymod._stage_stream_dir(spark, sf_dir, sv, "sv", 4)
+    landing = tempfile.mkdtemp(prefix="keybench_sv_")
+    d = stage_ordered_landing(sv, landing, N_FILES, "knowledge_time")
     result["n_rows"] = sv.count()
     result["n_keys_fine"] = sv.select("series_id", "valid_time").distinct().count()
     result["n_keys_entity"] = sv.select("series_id").distinct().count()
@@ -60,10 +74,12 @@ def main(sf_dir: str, out_path: str) -> int:
         t0 = time.time()
         n = run(fresh_stream()).count()
         result["runs"][name] = {"sec": round(time.time() - t0, 2), "rows_emitted": n}
+    shutil.rmtree(landing, ignore_errors=True)
 
     fine = result["runs"]["v2_fine_key"]["sec"]
     entity = result["runs"]["v2_entity_key"]["sec"]
     result["fine_over_entity_ratio"] = round(fine / entity, 2) if entity else None
+    result["fine_rows_equal_v1"] = result["runs"]["v2_fine_key"]["rows_emitted"] == result["runs"]["v1_arrow_state"]["rows_emitted"]
     with open(out_path, "w") as f:
         json.dump(result, f, indent=1)
     print(json.dumps(result))
